@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 
 /**
@@ -20,12 +21,24 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Session config every entry point should use. Matches the oracle:
-   * UTC session time zone, nanos parquet readable, AQE on. */
+   * UTC session time zone, nanos parquet readable, AQE on.
+   *
+   * Streaming checkpoints (offset/commit logs, state deltas, snapshots,
+   * checksums) are written through the FileSystem checkpoint manager.
+   * Spark's default FileContext manager resolves each rename's target
+   * with `getFileLinkStatus`, and on the local FS Hadoop answers that by
+   * forking a `readlink` process per checkpoint file;
+   * `FileSystem.rename` on the local FS is `File.renameTo` and forks
+   * nothing. The no-overwrite guarantee is the
+   * same on the local FS: FileContext's local rename is itself an
+   * exists-check then rename, as is this manager's. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    .config("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[FileSystemBasedCheckpointFileManager].getName)
 
   /**
    * Load one table. `events.ts` is stored as parquet TIMESTAMP(NANOS)

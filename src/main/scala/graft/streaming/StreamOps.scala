@@ -61,7 +61,9 @@ object StreamOps {
           try s.sorted(java.util.Comparator.reverseOrder()).iterator().asScala
             .foreach(f => java.nio.file.Files.deleteIfExists(f))
           finally s.close()
-        } catch { case _: Exception => () }
+        } catch { case e: Exception =>
+          System.err.println(s"[graft] could not delete staged dir $p: $e")
+        }
       }
     }
   }

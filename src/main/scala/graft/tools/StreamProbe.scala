@@ -5,7 +5,9 @@ import graft.{SparkEntry, Tables}
 
 /** Dev tool: run one query N times, print each wall time — for
  * measuring run-to-run variance of a single bench entry without the
- * full Bench scaffold. Usage: StreamProbe <sfDir> <reps> <query...> */
+ * full Bench scaffold. A failed rep prints no time, and the tool
+ * exits non-zero if any rep failed.
+ * Usage: StreamProbe <sfDir> <reps> <query...> */
 object StreamProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, reps, names @ _*) = args: @unchecked
@@ -20,13 +22,22 @@ object StreamProbe {
     try Tables.load(spark, sfDir, "lineitem").groupBy("l_returnflag").count()
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
+    var failed = 0
     for (r <- 1 to reps.toInt; name <- names) {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"$name FAILED: ${e.getMessage}") }
-      println(f"[probe] rep$r $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      try {
+        SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        println(f"[probe] rep$r $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      } catch { case e: Throwable =>
+        failed += 1
+        System.err.println(s"[probe] rep$r $name FAILED: $e")
+      }
     }
     spark.stop()
+    if (failed > 0) {
+      System.err.println(s"[probe] $failed rep(s) failed")
+      sys.exit(1)
+    }
   }
 }

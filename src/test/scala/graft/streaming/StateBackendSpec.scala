@@ -136,6 +136,58 @@ class StateBackendSpec extends SparkSuite {
     assert(counts == Map(1L -> 2L, 2L -> 1L))
   }
 
+  test("checkpoint writes fork no readlink process under either state store provider") {
+    // Spark's default FileContext checkpoint manager resolves every
+    // rename target through Hadoop's readlink shell-out: one child
+    // process per state delta, checksum, offset and commit file
+    def run(provider: Option[String]): (Map[Long, Long], Seq[String]) = {
+      val ss = spark.newSession()
+      provider.foreach(ss.conf.set("spark.sql.streaming.stateStore.providerClass", _))
+      implicit val sql = ss.sqlContext
+      import ss.implicits._
+      val ckpt = Files.createTempDirectory("graft_nofork")
+      val jfr = Files.createTempFile("graft_nofork", ".jfr")
+      val rec = new jdk.jfr.Recording()
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try {
+        val ms = MemoryStream[(Long, Double)]
+        val q = ms.toDS().toDF("k", "v").groupBy(col("k")).agg(count(lit(1)).as("n"))
+          .writeStream.format("memory").queryName("t_nofork")
+          .outputMode("complete").option("checkpointLocation", ckpt.toString).start()
+        try {
+          ms.addData((1L, 1.0), (1L, 2.0), (2L, 3.0))
+          q.processAllAvailable()
+          ms.addData((2L, 4.0), (3L, 5.0))
+          q.processAllAvailable()
+        } finally q.stop()
+        // a known child process: the recording must see process starts
+        new ProcessBuilder("true").start().waitFor()
+        rec.stop()
+        rec.dump(jfr)
+        import scala.jdk.CollectionConverters._
+        // program name of each started process (first word, no directory)
+        val programs = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala.toSeq
+          .filter(_.getEventType.getName == "jdk.ProcessStart")
+          .map(_.getString("command").takeWhile(_ != ' ').split('/').last)
+        val rows = ss.table("t_nofork").as[(Long, Long)].collect().toMap
+        (rows, programs)
+      } finally {
+        rec.close()
+        Files.deleteIfExists(jfr)
+        org.apache.commons.io.FileUtils.deleteDirectory(ckpt.toFile)
+      }
+    }
+    for (provider <- Seq(None, Some(
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))) {
+      val (rows, programs) = run(provider)
+      assert(rows == Map(1L -> 2L, 2L -> 2L, 3L -> 1L), s"$provider: got $rows")
+      assert(programs.contains("true"), s"$provider: no process starts recorded")
+      val readlinks = programs.count(_ == "readlink")
+      assert(readlinks == 0, s"$provider: $readlinks readlink forks among ${programs.size}")
+    }
+  }
+
   test("multi-sink: one shared materialization feeds several sinks") {
     val shared = spark.range(0, 1000).toDF("id")
       .filter(col("id") % 2 === 0)
